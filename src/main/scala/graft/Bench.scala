@@ -46,18 +46,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt.max(1)
-    // GraftExtensions.install carries the ObjectHashAggregate fallback
-    // threshold (top-k heap aggregation stays on the hash path)
-    val spark = graft.functions.GraftExtensions.install(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // session warm-up: JVM/codegen/scheduler spin-up and cold page cache
     // are not operator cost
@@ -296,12 +287,13 @@ object Bench {
     // ("value"/"unit":"sec"); full 4-decimal seconds medians stay on the
     // detail line (queries_med_full). qtmax/pm/px/xx/nr/ss also live on the
     // detail line now; rl + suspect stay here as the honesty signals.
+    // A sub-50 ms median reads 1, not 0, so it stays in scaling ratios.
     def contractLine(nKeep: Int): String = {
       val bySlow = results.sortBy(-_.med)
       val kept = bySlow.take(nKeep).map(_.name).toSet
       val dropped = bySlow.drop(nKeep)
       val qs = results.filter(r => kept(r.name))
-        .map(r => "\"" + r.name.split("_").head.drop(1) + "\":" + math.round(r.med * 10))
+        .map(r => "\"" + r.name.split("_").head.drop(1) + "\":" + math.max(1, math.round(r.med * 10)))
         .mkString("{", ",", "}")
       // truncation fallback only (a pathologically loaded run could still
       // overflow the tail): dropped fastest-first, count recorded

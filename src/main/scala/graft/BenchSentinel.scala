@@ -44,13 +44,23 @@ object BenchSentinel {
     if (j < 0) return (Map.empty, None)
     val body = archiveText.substring(i, j)
     // r18 contract lines mark the per-query unit as deciseconds
-    // ("qunit":"ds", emitted just before the queries map); pre-r18
+    // ("qunit":"ds", anywhere in the same contract line); pre-r18
     // archives carried 1-decimal seconds. Normalize to seconds so the
     // regression sentinel compares like with like across the format
-    // change.
-    val prefix = archiveText.substring(math.max(0, i - 80), i)
+    // change. The line ends at a raw newline or at a JSON-escaped one
+    // (the archive's stdout tail is one escaped string).
+    def nlBefore(c: String) = archiveText.lastIndexOf(c, i) match {
+      case -1 => 0
+      case x => x + c.length
+    }
+    def nlAfter(c: String) = archiveText.indexOf(c, i) match {
+      case -1 => archiveText.length
+      case x => x
+    }
+    val line = archiveText.substring(
+      math.max(nlBefore("\n"), nlBefore("\\n")), math.min(nlAfter("\n"), nlAfter("\\n")))
     val deci =
-      prefix.contains("\\\"qunit\\\":\\\"ds\\\"") || prefix.contains("\"qunit\":\"ds\"")
+      line.contains("\\\"qunit\\\":\\\"ds\\\"") || line.contains("\"qunit\":\"ds\"")
     val re = """\\?"(\d+)\\?":([0-9.]+)""".r
     val meds = re.findAllMatchIn(body)
       .map { m =>

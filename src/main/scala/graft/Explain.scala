@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
@@ -30,15 +29,8 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.tail.toSeq else Seq("q01_bucket_count", "q14_knn_nearest", "q21_pricing_agg")
     val exec = sys.env.get("EXEC").contains("1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", if (exec) "32" else "4")
-    val spark = graft.functions.GraftExtensions.install(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", if (exec) "32" else "4").toInt
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val qs = SparkEntry.queries
     names.foreach { n =>

@@ -202,7 +202,7 @@ object KnnResample {
     * try_element_at — null past the array end, ANSI-safe), with the
     * weight null-guarded so a missing slot can never contribute even
     * under a non-null-propagating custom weight function. */
-  private def candSlots(k: Int, weight: Column => Column): Seq[(Column, Column)] =
+  private[graft] def candSlots(k: Int, weight: Column => Column): Seq[(Column, Column)] =
     (1 to k).map { i =>
       val s = try_element_at(col("cand"), lit(i))
       (when(s.isNull, lit(null).cast("double"))

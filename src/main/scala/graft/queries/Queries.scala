@@ -336,27 +336,17 @@ object Queries {
     Some(s"""WITH $swathSql, $tgtSql, $knnRankedSql
       SELECT dst_id, src_id, dist2, value FROM ranked WHERE rank = 1 ORDER BY dst_id"""))
 
-  /** Rank-slot view of `neighboursAgg`'s candidate array (r17): slot i =
-    * try_element_at(cand, i) — null past the array end — with the weight
-    * null-guarded so a missing rank contributes null exactly like the
-    * old pivot. Replaces the explode + `max(when(rank === i, expr))`
-    * pivot AGGREGATION bit-exactly: rank i names at most ONE row, so the
-    * max over the group is that row's expression (or null) — which is
-    * precisely slot i's expression. The whole pivot becomes one codegen
-    * projection; the Generate + 16-32-buffer double HashAggregate
-    * disappear from the q15/q16/q17/q42/q50 plans (measured 12.3 s of
-    * aggregate task time on q17 at sf0.1). */
-  private def rankSlots(k: Int, wOf: Column => Column): Seq[(Column, Column)] =
-    (1 to k).map { i =>
-      val s = try_element_at(col("cand"), lit(i))
-      (when(s.isNull, lit(null).cast("double")).otherwise(wOf(s.getField("dist2"))), s)
-    }
-
-  /** The q16/q17 pivot columns (wv_i, w_i [, wvv_i, ww_i]) over rank
-    * slots — same names and values as the old pivot aggregate. */
+  /** The q16/q17 pivot columns (wv_i, w_i [, wvv_i, ww_i]) over the
+    * rank slots of `neighboursAgg`'s candidate array
+    * (`KnnResample.candSlots`) — same names and values as the old
+    * explode + `max(when(rank === i, expr))` pivot aggregate, bit-exactly:
+    * rank i names at most ONE row, so the max over the group is slot i's
+    * expression. The whole pivot is one codegen projection (r17; the
+    * Generate + double HashAggregate cost 12.3 s of task time on q17 at
+    * sf0.1). */
   private def pivotAgg(
       agg: DataFrame, k: Int, wOf: Column => Column, extra: Boolean): DataFrame = {
-    val cols = rankSlots(k, wOf).zipWithIndex.flatMap { case ((w, s), i0) =>
+    val cols = KnnResample.candSlots(k, wOf).zipWithIndex.flatMap { case ((w, s), i0) =>
       val i = i0 + 1
       val v = s.getField("value")
       Seq((w * v).as(s"wv$i"), w.as(s"w$i")) ++
@@ -451,7 +441,7 @@ object Queries {
       val agg = KnnResample.neighboursAgg(src, tgt(s, d), 2.0, 8, planar = true,
         carry = Seq("value", "value2"))
       // rank-slot pivot (see pivotAgg): same columns, one codegen projection
-      val cols = rankSlots(8, d2 => round(exp(-d2 / lit(2.25)), 7)).zipWithIndex
+      val cols = KnnResample.candSlots(8, d2 => round(exp(-d2 / lit(2.25)), 7)).zipWithIndex
         .flatMap { case ((w, sl), i0) =>
           val i = i0 + 1
           val va = sl.getField("value"); val vb = sl.getField("value2")

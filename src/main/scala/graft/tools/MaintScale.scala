@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Checkpoints.BarrierSyntax
 
@@ -31,14 +31,7 @@ object MaintScale {
       s"target/tmp/${base.split('/').last}x$factor")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt.max(1)
     val batchSize = sys.env.getOrElse("SPARK_GRAFT_MAINT_BATCH", "200").toInt
-    val spark = graft.functions.GraftExtensions.install(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(32)
     spark.sparkContext.setLogLevel("WARN")
     require(new java.io.File(s"$big/documents.parquet").exists(),
       s"no ${factor}x docs blow-up at $big — run ScaleBench with SPARK_GRAFT_SCALE_TABLES=docs first")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** r17 optimization-round probe harness: micro-measurements behind the
@@ -52,14 +51,7 @@ object R17Probe {
   /** Per-Spark-job wall breakdown for ONE query: runs it twice (warm
     * second), printing every job's duration + call site. */
   def jobs(sfDir: String, qName: String): Unit = {
-    val spark = graft.functions.GraftExtensions.install(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(32)
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/documents.parquet").count()
@@ -102,14 +94,7 @@ object R17Probe {
 
   /** Phase split for the cluster-maintenance family at a given sf dir. */
   def phases(sfDir: String): Unit = {
-    val spark = graft.functions.GraftExtensions.install(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(32)
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect()
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

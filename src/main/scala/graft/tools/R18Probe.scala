@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** r18 optimization-round probe harness: avgHashProbe root-cause
@@ -8,17 +8,6 @@ import org.apache.spark.sql.functions._
   * degradation the r17 round measured and left open) and the bm25
   * hot-qid skew fixture. Dev-only; never run by the driver. */
 object R18Probe {
-
-  private def session(extra: Map[String, String] = Map.empty): SparkSession = {
-    val b = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    extra.foreach { case (k, v) => b.config(k, v) }
-    graft.functions.GraftExtensions.install(b).getOrCreate()
-  }
 
   /** Walk the executed plan printing every HashAggregate's probe/memory
     * metrics. */
@@ -48,7 +37,7 @@ object R18Probe {
 
   /** Controlled replicas of the q81 (qid, doc) sum shape. */
   def hashprobe(): Unit = {
-    val spark = session()
+    val spark = graft.GraftSession.local(32)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val nQids = 18
@@ -102,7 +91,7 @@ object R18Probe {
     * whole fan-out in one task). Compares a 1-hot-query batch against a
     * normal batch on wall clock. */
   def bm25hot(sfDir: String): Unit = {
-    val spark = session()
+    val spark = graft.GraftSession.local(32)
     spark.sparkContext.setLogLevel("ERROR")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     docs.count()
@@ -145,7 +134,7 @@ object R18Probe {
     * query produces at corpus scale. A/B: r17's qid-only exchange
     * (everything in one task) vs r18's salted two-phase sum. */
   def bm25tail(): Unit = {
-    val spark = session()
+    val spark = graft.GraftSession.local(32)
     spark.sparkContext.setLogLevel("ERROR")
     val rows = 20000000L
     def fanout = spark.range(rows)

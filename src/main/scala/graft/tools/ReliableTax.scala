@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Durability-tax measurement for reliable-checkpoint mode (r17, a
@@ -35,15 +34,8 @@ object ReliableTax {
       .filter(d => new java.io.File(s"$d/documents.parquet").exists())
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt.max(1)
     val relRoot = java.nio.file.Files.createTempDirectory("graft_reliable_root").toString
-    val spark = graft.functions.GraftExtensions.install(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(32,
+      Map("spark.cleaner.referenceTracking.cleanCheckpoints" -> "true"))
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect() // warm-up
 

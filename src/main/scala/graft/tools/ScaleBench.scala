@@ -72,14 +72,7 @@ object ScaleBench {
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
       s"target/tmp/${base.split('/').last}x$factor")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt.max(1)
-    val spark = graft.functions.GraftExtensions.install(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(32)
     spark.sparkContext.setLogLevel("WARN")
 
     // orders is the newest table in the layout — checking it (not just

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Crossover measurement for `Graph.triangleStats`' driver-local fast
@@ -25,13 +24,7 @@ object TriCrossover {
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt.max(1)
     val sizes = sys.env.getOrElse("SPARK_GRAFT_TRI_SIZES", "50000,100000,200000,500000,1000000")
       .split(",").map(_.trim.toLong).toSeq
-    val spark = graft.functions.GraftExtensions.install(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(32)
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect() // warm-up
 

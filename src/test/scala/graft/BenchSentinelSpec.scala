@@ -93,6 +93,20 @@ class BenchSentinelSpec extends AnyFunSuite {
     assert(m2 === Map("01" -> 1.2) && sf2 === Some("sf0.01"))
   }
 
+  test("archive parsing: qunit counts anywhere in the contract line, and only there") {
+    // a field wider than any fixed window sits between qunit and queries
+    val pad = "x" * 120
+    val tail = s"""{"n": 19, "tail": "{\\"metric\\":\\"total\\",\\"value\\":1.2,\\"unit\\":\\"sec\\",\\"qunit\\":\\"ds\\",\\"note\\":\\"$pad\\",\\"queries\\":{\\"01\\":12},\\"sf\\":\\"sf0.1\\"}\\n"}"""
+    assert(BenchSentinel.parsePrevMedians(tail)._1 === Map("01" -> 1.2))
+    val raw = s"""{"metric":"total","qunit":"ds","note":"$pad","queries":{"01":12},"sf":"sf0.01"}"""
+    assert(BenchSentinel.parsePrevMedians(raw)._1 === Map("01" -> 1.2))
+    // a qunit on the line BEFORE a seconds-unit contract line does not leak
+    val twoLines = s"""{"qunit":"ds"}\n{"metric":"total","queries":{"01":1.2},"sf":"sf0.01"}"""
+    assert(BenchSentinel.parsePrevMedians(twoLines)._1 === Map("01" -> 1.2))
+    val twoEscaped = s"""{"tail": "{\\"qunit\\":\\"ds\\"}\\n{\\"metric\\":\\"total\\",\\"queries\\":{\\"01\\":1.2}}\\n"}"""
+    assert(BenchSentinel.parsePrevMedians(twoEscaped)._1 === Map("01" -> 1.2))
+  }
+
   test("newestPrevFile picks the highest round number") {
     val dir = java.nio.file.Files.createTempDirectory("benchsent").toFile
     try {

@@ -152,13 +152,16 @@ class ClusterMaintainSpec extends SparkSpec {
     assert(readAll() === rebuilt(all41, Seq((1L, 2L), (3L, 4L), (4L, 100L))))
 
     // merge 3: the chain is at maxChain — this merge must AUTO-FOLD
-    // into a full base (41 rows, no parent pointer)
+    // into a full base (41 rows, a one-line chain naming itself)
     Dedup.mergeClusterLabels(spark, dir, Seq((5L, 6L)).toDF("d1", "d2"),
       delta = true, maxChain = 3)
     assert(liveGen() === "_graft_gen_00003")
     assert(genRows("_graft_gen_00003") === 41L,
       "reaching maxChain must fold the chain into a full base")
-    assert(!new java.io.File(s"$dir/_graft_gen_00003/_graft_label_parent").exists())
+    val foldedChain = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+      s"$dir/_graft_gen_00003/_graft_label_chain")), "UTF-8").split("\n").filter(_.nonEmpty)
+    assert(foldedChain.length === 1 && foldedChain.head.split("\t").head === "_graft_gen_00003",
+      s"a folded base's chain sidecar must list only itself: ${foldedChain.mkString("|")}")
     // the superseded CHAIN (base + both deltas) is retained for
     // in-flight readers
     def gens() = new java.io.File(dir).listFiles()
@@ -191,6 +194,37 @@ class ClusterMaintainSpec extends SparkSpec {
     Dedup.compactClusterLabels(spark, dir)
     assert(pinned.count() === 41L,
       "a reader holding a superseded chain must complete after the fold")
+  }
+
+  test("a live generation without its chain sidecar fails reads and merges loudly, no fallback") {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("labels_nosidecar").toString
+    val docs = (1L to 20L).toDF("doc_id")
+    Dedup.writeClusterLabels(
+      Dedup.nearDupClusters(docs, Seq((1L, 2L)).toDF("d1", "d2"))
+        .select(col("doc_id").as("id"), col("cluster_id")), dir)
+    Dedup.mergeClusterLabels(spark, dir, Seq((3L, 4L)).toDF("d1", "d2"),
+      delta = true, maxChain = 10)
+    val live = IndexMaintenance.resolveLive(spark, dir)
+    assert(new java.io.File(live).getName === "_graft_gen_00001")
+    // the chain sidecar (and Hadoop's checksum for it) is gone
+    Seq("_graft_label_chain", "._graft_label_chain.crc").foreach { f =>
+      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(live, f))
+    }
+    def assertLoud(what: String)(body: => Any): Unit = {
+      val e = intercept[IllegalStateException](body)
+      assert(e.getMessage.contains("_graft_gen_00001") &&
+        e.getMessage.contains("no _graft_label_chain sidecar") &&
+        e.getMessage.contains("writeClusterLabels"), s"$what: ${e.getMessage}")
+    }
+    assertLoud("read")(Dedup.readClusterLabels(spark, dir))
+    assertLoud("merge")(Dedup.mergeClusterLabels(spark, dir,
+      Seq((5L, 6L)).toDF("d1", "d2"), delta = true, maxChain = 10))
+    assertLoud("fold")(Dedup.mergeClusterLabels(spark, dir,
+      Seq((5L, 6L)).toDF("d1", "d2")))
+    // the failed merges wrote nothing: the live pointer has not moved
+    assert(IndexMaintenance.resolveLive(spark, dir) === live)
   }
 
   test("chain reads never shuffle the corpus: base left-joins a broadcast touched-rows overlay (r15, r14 verdict #2)") {
