@@ -12,8 +12,8 @@ object GraftSession {
     * aggregation on the hash path): shuffle partitions = `cpus`, AQE on,
     * UTC session time, UI off, and INT64 nanosecond parquet timestamps
     * (events.parquet) read as long nanos, which matches the oracle's
-    * epoch_ns arithmetic. `extra` confs apply last. */
-  def local(cpus: Int, extra: Map[String, String] = Map.empty): SparkSession = {
+    * epoch_ns arithmetic. */
+  def local(cpus: Int): SparkSession = {
     val b = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
@@ -21,7 +21,6 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-    extra.foreach { case (k, v) => b.config(k, v) }
     graft.functions.GraftExtensions.install(b).getOrCreate()
   }
 }

@@ -642,7 +642,8 @@ object Dedup {
     * `maxIters` EXPECTING truncated labels gets exact labels below the
     * gate: the fast path supersedes the truncation contract, it does
     * not emulate it (unlike [[localKCore]]'s round-synchronous peel,
-    * where truncation parity is cheap and preserved).
+    * where truncation parity is cheap and preserved). `ClusterDedupSpec`
+    * pins both sides on a 64-node path.
     *
     * Returns (id, cluster_id) for every vertex that appears in a pair. */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 20): DataFrame = {

@@ -107,17 +107,11 @@ object Graph {
         s"spark.graft.cc.localThreshold must be an integer edge count, got '$v'"))
     }
 
-  /** The tighter [[triangleStats]] fast-path cap
-    * (`spark.graft.cc.triangleLocalThreshold`, default 200k edges):
-    * wedge work is O(m^1.5), not O(m), so the shared CC threshold is
-    * too permissive for the driver-local twin. Combined with
-    * [[ccLocalThreshold]] via min — both gates must pass. */
-  private def triangleLocalThreshold(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.graft.cc.triangleLocalThreshold") match {
-      case None => 200000L
-      case Some(v) => v.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
-        s"spark.graft.cc.triangleLocalThreshold must be an integer edge count, got '$v'"))
-    }
+  /** The tighter [[triangleStats]] fast-path cap, in edges: wedge work
+    * is O(m^1.5), not O(m), so the shared CC threshold is too permissive
+    * for the driver-local twin. Combined with [[ccLocalThreshold]] via
+    * min — both gates must pass. */
+  private val TriangleLocalMax = 200000L
 
   /** Slice count for a driver-local fast-path result: threshold-sized
     * results (~1M rows at the default gate) should not land in ONE task
@@ -187,11 +181,9 @@ object Graph {
     // because the wedge count is O(m^1.5) (the orientation's bound),
     // not O(m) — 200k edges is ~10^8 wedge checks worst-case,
     // single-threaded-comfortable; past that the distributed self-join
-    // spreads exactly that work across the cluster. The cap is its own
-    // conf (r17) so `tools/TriCrossover` can sweep it; the measured
-    // local-vs-distributed crossover behind the default is in SCALING
-    // "Small-graph fast path".
-    if (smallGraph(e0, cap = triangleLocalThreshold(e0.sparkSession))) {
+    // spreads exactly that work across the cluster. A local-vs-
+    // distributed sweep of this cap is recorded in plans/r18/PROBES.md.
+    if (smallGraph(e0, cap = TriangleLocalMax)) {
       localLongRows(e0).foreach { rows =>
         val deg = new java.util.HashMap[Long, Long]()
         rows.foreach { r =>

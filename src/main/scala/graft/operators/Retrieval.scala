@@ -203,7 +203,8 @@ object Retrieval {
     // exchange-free but concentrated each query's ENTIRE posting fan-out
     // (Σ df·qf rows for that qid — potentially corpus-scale for one hot
     // query) in a single task; a 1-query batch over the sf0.1 corpus
-    // measured 4.8 s vs 3.2 s for a 16-query batch (R18Probe bm25hot).
+    // measured 4.8 s vs 3.2 s for a 16-query batch (r18 hot-query probe;
+    // a later re-run is recorded in plans/r18/PROBES.md).
     // The salt is a DETERMINISTIC function of the doc id, so
     // (qid, _salt, doc) groups ≡ (qid, doc) groups — the sum is
     // result-identical (integer micros, order-free) — while the exchange

@@ -36,12 +36,7 @@ object MaintScale {
     require(new java.io.File(s"$big/documents.parquet").exists(),
       s"no ${factor}x docs blow-up at $big — run ScaleBench with SPARK_GRAFT_SCALE_TABLES=docs first")
 
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        shuffleBytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val shuffleBytes = ScaleBench.shuffleMeter(spark)
 
     // every label dir this tool mints is scratch: delete it as soon as
     // its timed reads complete (r15 advice — at factor 50 each holds a

@@ -162,17 +162,9 @@ object ScaleBench {
       blowUpEvents(spark, base, out, factor)
     }
 
-    // shuffle-byte meter (r12: the 50x rows record bytes, not just wall
-    // time): stage-completion events aggregate task shuffle writes; the
-    // 300 ms settle after each timed run lets the async bus drain —
+    // the 300 ms settle after each timed run lets the async bus drain —
     // approximate by a few stages at worst, plenty for growth SHAPE
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    val shuffleListener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        shuffleBytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
-    spark.sparkContext.addSparkListener(shuffleListener)
+    val shuffleBytes = shuffleMeter(spark)
 
     def time(dir: String, name: String): (Double, Long) = {
       val fn = graft.SparkEntry.queries(name)
@@ -214,8 +206,21 @@ object ScaleBench {
         s""""shuffle_mb_1":${f"${sw1 / 1048576.0}%.1f"},"shuffle_mb_$factor":${f"${swN / 1048576.0}%.1f"}}"""
     }
     println(s"""{"metric":"scale","factor":$factor,"iters":$iters,"queries":{${rows.mkString(",")}}}""")
-    spark.sparkContext.removeSparkListener(shuffleListener)
     spark.stop()
+  }
+
+  /** Shuffle-byte meter (r12: the 50x rows record bytes, not just wall
+    * time): a listener that adds every completed stage's task shuffle
+    * writes to the returned counter. Read it before and after a timed
+    * run; the listener bus is async, so settle briefly first. */
+  private[tools] def shuffleMeter(spark: SparkSession): java.util.concurrent.atomic.AtomicLong = {
+    val bytes = new java.util.concurrent.atomic.AtomicLong
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        bytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    })
+    bytes
   }
 
   /** Union `factor` copies with each key column shifted by just the copy

@@ -120,6 +120,32 @@ class ClusterDedupSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.cc.localThreshold")
   }
 
+  test("maxIters below the path's diameter: fast path stays exact, distributed loop truncates") {
+    val s = spark
+    import s.implicits._
+    // 64-node path 1000-1001-...-1063: one hop + one pointer jump moves
+    // a label at most 2 ids down, far short of the component minimum
+    val pairs = (1000L until 1063L).map(i => (i, i + 1)).toDF("d1", "d2")
+    def labels(maxIters: Int): Map[Long, Long] =
+      Dedup.connectedComponents(pairs, maxIters = maxIters)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // default threshold: driver-local union-find ignores maxIters
+    val localOne = labels(1)
+    assert(localOne.size == 64 && localOne.values.toSet == Set(1000L))
+    val localDefault = labels(20)
+    spark.conf.set("spark.graft.cc.localThreshold", "0")
+    try {
+      val distOne = labels(1)
+      assert(distOne.size == 64)
+      assert(distOne.values.toSet.size > 1, "one round cannot close a 64-node path")
+      distOne.foreach { case (id, label) =>
+        assert(label <= id, s"label $label of vertex $id must not exceed its id")
+      }
+      assert(labels(20) === localDefault, "both paths reach the fixpoint at the default maxIters")
+    } finally spark.conf.unset("spark.graft.cc.localThreshold")
+    assert(localDefault.values.toSet == Set(1000L))
+  }
+
   test("fast path gate: null ids fall through to the distributed loop's null semantics") {
     val s = spark
     import s.implicits._
