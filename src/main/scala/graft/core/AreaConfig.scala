@@ -144,13 +144,6 @@ object AreaConfig {
     }
   }
 
-  /** load_area (`area_config.py:69`). */
-  def loadFile(path: String, regions: String*): Seq[AreaDef] = {
-    val text = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8")
-    if (text.contains("REGION:")) parseLegacy(text, regions: _*)
-    else loadFromString(text, regions: _*)
-  }
-
   private def num(n: Node): Double = n match {
     case Scalar(v) => v.toDouble
     case other     => throw new IllegalArgumentException(s"expected number, got $other")

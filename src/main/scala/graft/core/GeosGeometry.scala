@@ -123,11 +123,4 @@ object GeosGeometry {
     // needs edge-sampled vertices to see mid-edge lon/lat extrema
     densify(clipPolygon(disk, rect), nbPoints)
   }
-
-  /** Visible-disk boundary in lon/lat — `get_geostationary_bounding_box_in_
-    * lonlats` (`:2854-2863`). */
-  def diskBoundaryLonLats(area: AreaDef, nbPoints: Int = 50): Seq[(Double, Double)] =
-    diskPolygonInExtent(area, nbPoints)
-      .map { case (x, y) => area.crs.inverse(x, y) }
-      .filterNot { case (lo, la) => lo.isNaN || la.isNaN }
 }

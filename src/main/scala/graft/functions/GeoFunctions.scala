@@ -24,11 +24,6 @@ object GeoFunctions {
   def lonlat2z(lat: Column, r: Double = EarthRadius): Column =
     sin(radians(lat)) * lit(r)
 
-  /** xyz -> lon/lat degrees (`pyresample/geometry.py:894-898`). */
-  def xyz2lon(x: Column, y: Column): Column = degrees(atan2(y, x))
-  def xyz2lat(x: Column, y: Column, z: Column): Column =
-    degrees(atan2(z, sqrt(x * x + y * y)))
-
   /** Haversine great-circle distance in metres (`pyresample/spherical.py:57-98`). */
   def haversine(lon1: Column, lat1: Column, lon2: Column, lat2: Column,
       r: Double = EarthRadius): Column = {
@@ -50,10 +45,6 @@ object GeoFunctions {
 
   /** FWHM -> Gaussian sigma (`pyresample/utils/__init__.py:161`). */
   def fwhm2sigma(fwhm: Double): Double = fwhm / (2 * math.sqrt(math.log(2)))
-
-  /** Round to grid resolution (`pyresample/bucket/__init__.py:480-497`). */
-  def roundToResolution(c: Column, resolution: Double): Column =
-    round(c / lit(resolution)) * lit(resolution)
 
   // ------------------------------------------------ area cell arithmetic
 

@@ -1445,32 +1445,14 @@ object Dedup {
       .drop("_b")
   }
 
-  private val MinhashParamsFile = "_graft_minhash_params"
+  /** The MinHash index's layout: banded rows partitioned by band,
+    * guarded by the hash-family sidecar — signatures are not comparable
+    * across parameter sets. */
+  private val MinhashLayout = IndexMaintenance.IndexLayout(
+    "band_idx", "_graft_minhash_params", "MinHash parameters")
 
   private def minhashParams(numHashes: Int, rowsPerBand: Int, shingleN: Int): String =
     s"numHashes=$numHashes rowsPerBand=$rowsPerBand shingleN=$shingleN"
-
-  private def writeSidecar(df: DataFrame, dir: String, content: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir, MinhashParamsFile)
-    val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def requireSidecarMatch(df: DataFrame, dir: String, expected: String,
-      api: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir, MinhashParamsFile)
-    val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val stored = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      require(stored == expected,
-        s"$api: index at $dir was built under different MinHash parameters " +
-          s"(stored '$stored', supplied '$expected') — signatures are not " +
-          "comparable across parameter sets; rebuild with writeMinhashIndex")
-    }
-  }
 
   /** Materialize the banded MinHash signature index ONCE as a parquet
     * layout partitioned by `band_idx` — the build-once/probe-many form
@@ -1490,17 +1472,12 @@ object Dedup {
       rowsPerBand: Int = 2,
       shingleN: Int = 2): Unit = {
     require(numHashes % rowsPerBand == 0, "numHashes must be divisible by rowsPerBand")
-    def writeTo(target: String): Unit = {
-      minhashIndexRows(docs, textCol, idCol, "ref_id", numHashes, rowsPerBand, shingleN)
-        .write.mode("overwrite").partitionBy("band_idx").parquet(target)
-      writeSidecar(docs, target, minhashParams(numHashes, rowsPerBand, shingleN))
-    }
     // manifest-aware (r12): rebuild-as-new-generation with a zero-gap
     // pointer swap — a dedupServe stream picks up the new reference set
     // on its next micro-batch (ManifestSwapSpec)
-    if (IndexMaintenance.hasManifest(docs.sparkSession, dir))
-      IndexMaintenance.rebuild(docs.sparkSession, dir)(writeTo)
-    else writeTo(dir)
+    IndexMaintenance.writeIndex(
+      minhashIndexRows(docs, textCol, idCol, "ref_id", numHashes, rowsPerBand, shingleN),
+      dir, MinhashLayout, minhashParams(numHashes, rowsPerBand, shingleN))
   }
 
   /** Incremental maintenance: append new (already-deduplicated) docs'
@@ -1517,11 +1494,10 @@ object Dedup {
       shingleN: Int = 2): Unit = {
     // manifest-aware (r12): appends land in the LIVE generation, so a
     // manifest-pointer index keeps its append lifecycle unchanged
-    val live = IndexMaintenance.resolveLive(newDocs.sparkSession, dir)
-    requireSidecarMatch(newDocs, live, minhashParams(numHashes, rowsPerBand, shingleN),
+    IndexMaintenance.appendIndex(
+      minhashIndexRows(newDocs, textCol, idCol, "ref_id", numHashes, rowsPerBand, shingleN),
+      dir, MinhashLayout, minhashParams(numHashes, rowsPerBand, shingleN),
       "appendMinhashIndex")
-    minhashIndexRows(newDocs, textCol, idCol, "ref_id", numHashes, rowsPerBand, shingleN)
-      .write.mode("append").partitionBy("band_idx").parquet(live)
   }
 
   /** One-file-per-band compaction of a [[writeMinhashIndex]] layout
@@ -1571,15 +1547,8 @@ object Dedup {
       shingleN: Int = 2,
       minMatches: Int = 4,
       broadcastIncoming: Boolean = true): DataFrame = {
-    // resolveLive per probe (r12): on a manifest-pointer layout a
-    // compaction swap is picked up by the NEXT probe (or micro-batch)
-    // atomically — the live path is never absent mid-swap. Tombstones
-    // stay at the ROOT: they are pending deletes, generation-independent
-    val live = IndexMaintenance.resolveLive(incoming.sparkSession, dir)
-    requireSidecarMatch(incoming, live, minhashParams(numHashes, rowsPerBand, shingleN),
-      "dedupAgainstMinhashIndex")
-    val idx = IndexMaintenance.filterTombstoned(incoming.sparkSession, dir,
-      incoming.sparkSession.read.parquet(live), "ref_id")
+    val idx = IndexMaintenance.openIndex(incoming.sparkSession, dir, MinhashLayout,
+      minhashParams(numHashes, rowsPerBand, shingleN), "ref_id", "dedupAgainstMinhashIndex")
     val inRows0 = minhashIndexRows(
         incoming, textCol, idCol, "new_id", numHashes, rowsPerBand, shingleN)
       .select(col("new_id") +: col("band_idx") +: col("band") +:

@@ -23,6 +23,17 @@ import org.apache.spark.sql.functions._
   * result; MinhashIndexSpec and IvfPqMaintSpec pin probe-before ==
   * probe-after bit-exactly.
   *
+  * Lifecycle: the three parameter-sidecar indexes — IVF-PQ
+  * (`Similarity`, partitioned by `centroid_id`, sidecar `_graft_model`),
+  * MinHash (`Dedup`, `band_idx`, `_graft_minhash_params`) and media
+  * fingerprints (`Multimodal`, `band_idx`, `_graft_fp_params`) — write,
+  * append and open through one code path: [[writeIndex]] (flat overwrite
+  * or a new manifest generation via [[rebuild]]), [[appendIndex]] and
+  * [[openIndex]] (live generation, guard, read, tombstone filter). All
+  * three planes share one guard, [[requireParamsMatch]], whose sidecar
+  * read goes through [[readSmall]]: one control read per guarded call on
+  * a flat layout, two on a manifest layout.
+  *
   * Crash window: between the two renames the live path is briefly
   * absent; a crash there leaves the complete OLD index at
   * `<dir>__precompact` for manual recovery, and the staging dir is only
@@ -228,17 +239,19 @@ object IndexMaintenance {
   }
 
   /** Throws when `dir` carries sidecar `name` with content other than
-    * `expected` — the shared guard that keeps probe/append parameters
-    * consistent with the build's. Absent sidecar passes unchecked
+    * `expected` — the shared guard of the index lifecycle below, which
+    * keeps probe/append parameters consistent with the build's; the
+    * message names `what` differs ("model parameters", "MinHash
+    * parameters", "parameters"). Absent sidecar passes unchecked
     * (pre-sidecar or externally-written indexes). */
-  def requireParamsMatch(
-      spark: SparkSession, dir: String, name: String, expected: String, api: String): Unit = {
+  private[graft] def requireParamsMatch(spark: SparkSession, dir: String, name: String,
+      expected: String, api: String, what: String): Unit = {
     val p = new Path(dir, name)
     val fs = fileSystem(spark, dir)
     if (fs.exists(p)) {
       val stored = readSmall(fs, p)
       require(stored == expected,
-        s"$api: index at $dir was built under different parameters " +
+        s"$api: index at $dir was built under different $what " +
           s"(stored '$stored', supplied '$expected') — rebuild the index")
     }
   }
@@ -281,6 +294,47 @@ object IndexMaintenance {
         !alsoKeep.contains(p.getName))
       .foreach(p => fs.delete(p, true))
     next.toString
+  }
+
+  // ------------------------------------------------- index lifecycle
+
+  /** How one operator plane persists its index: the parquet partition
+    * column, the `_graft_*` parameter sidecar, and what a mismatched
+    * sidecar means, for the guard's message. */
+  private[graft] final case class IndexLayout(partitionCol: String, sidecar: String, what: String)
+
+  /** Write a complete index of `rows` with sidecar content `params`: a
+    * flat overwrite of `dir`, or on a manifest layout a new generation
+    * through [[rebuild]] — a zero-gap swap that a probe still holding the
+    * old parameters fails on loudly, never mixing the two builds. */
+  private[graft] def writeIndex(
+      rows: DataFrame, dir: String, layout: IndexLayout, params: String): Unit = {
+    val spark = rows.sparkSession
+    def writeTo(target: String): Unit = {
+      rows.write.mode("overwrite").partitionBy(layout.partitionCol).parquet(target)
+      writeParamsSidecar(spark, target, layout.sidecar, params)
+    }
+    if (hasManifest(spark, dir)) rebuild(spark, dir)(writeTo) else writeTo(dir)
+  }
+
+  /** Append `rows` to the live generation of the index at `dir`, after
+    * the guard has checked `params` against its sidecar. */
+  private[graft] def appendIndex(rows: DataFrame, dir: String, layout: IndexLayout,
+      params: String, api: String): Unit = {
+    val live = resolveLive(rows.sparkSession, dir)
+    requireParamsMatch(rows.sparkSession, live, layout.sidecar, params, api, layout.what)
+    rows.write.mode("append").partitionBy(layout.partitionCol).parquet(live)
+  }
+
+  /** The live rows of the index at `dir` for a probe: resolve the live
+    * generation (per call, so a swap is picked up by the next probe),
+    * guard `params` against its sidecar, read it, and drop the ids
+    * tombstoned at the root (pending deletes are generation-independent). */
+  private[graft] def openIndex(spark: SparkSession, dir: String, layout: IndexLayout,
+      params: String, idCol: String, api: String): DataFrame = {
+    val live = resolveLive(spark, dir)
+    requireParamsMatch(spark, live, layout.sidecar, params, api, layout.what)
+    filterTombstoned(spark, dir, spark.read.parquet(live), idCol)
   }
 
   /** DELETE from a persisted index, tombstone-style: the ids are

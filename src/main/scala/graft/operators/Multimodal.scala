@@ -349,7 +349,9 @@ object Multimodal {
 
   // --------------------------------------------- persisted fingerprint index
 
-  private val FpParamsFile = "_graft_fp_params"
+  /** The fingerprint index's layout: banded rows partitioned by band,
+    * guarded by the fingerprint-family sidecar. */
+  private val FpLayout = IndexMaintenance.IndexLayout("band_idx", "_graft_fp_params", "parameters")
   private def fpParams(kind: String): String = s"kind=$kind bands=5 bits=13"
 
   /** Materialize a perceptual-fingerprint index ONCE as a parquet layout
@@ -369,7 +371,8 @@ object Multimodal {
       dir: String,
       idCol: String = "doc_id",
       binCol: String = "payload"): Unit =
-    writeFpIndex(docs, dir, aHash(col(binCol)), "ahash63", idCol)
+    IndexMaintenance.writeIndex(fpIndexRows(docs, aHash(col(binCol)), idCol, "ref_id"),
+      dir, FpLayout, fpParams("ahash63"))
 
   /** The audio twin of [[writeImageFpIndex]] (Haitsma–Kalker window
     * fingerprints). */
@@ -378,19 +381,17 @@ object Multimodal {
       dir: String,
       idCol: String = "doc_id",
       binCol: String = "payload"): Unit =
-    writeFpIndex(docs, dir, audioFp(col(binCol)), "audiofp63", idCol)
+    IndexMaintenance.writeIndex(fpIndexRows(docs, audioFp(col(binCol)), idCol, "ref_id"),
+      dir, FpLayout, fpParams("audiofp63"))
 
   /** Incremental maintenance: append new (already-deduplicated) payloads'
-    * banded fingerprint rows — rows are independent, so append ≡ rebuild
-    * (MultimodalIndexSpec). Appends land in the live generation on a
-    * manifest layout. */
-  def appendImageFpIndex(newDocs: DataFrame, dir: String,
-      idCol: String = "doc_id", binCol: String = "payload"): Unit =
-    appendFpIndex(newDocs, dir, aHash(col(binCol)), "ahash63", idCol)
-
+    * banded audio fingerprint rows — rows are independent, so append ≡
+    * rebuild (MultimodalIndexSpec). Appends land in the live generation
+    * on a manifest layout. */
   def appendAudioFpIndex(newDocs: DataFrame, dir: String,
       idCol: String = "doc_id", binCol: String = "payload"): Unit =
-    appendFpIndex(newDocs, dir, audioFp(col(binCol)), "audiofp63", idCol)
+    IndexMaintenance.appendIndex(fpIndexRows(newDocs, audioFp(col(binCol)), idCol, "ref_id"),
+      dir, FpLayout, fpParams("audiofp63"), "appendFpIndex")
 
   /** DELETE reference payloads — tombstoned immediately, honored by every
     * subsequent probe, expunged at the next [[compactFpIndex]]. */
@@ -457,38 +458,11 @@ object Multimodal {
         col("_b.band_idx").as("band_idx"), col("_b.band").as("band"))
   }
 
-  private def writeFpIndex(docs: DataFrame, dir: String,
-      fp: org.apache.spark.sql.Column, kind: String, idCol: String): Unit = {
-    val spark = docs.sparkSession
-    def writeTo(target: String): Unit = {
-      fpIndexRows(docs, fp, idCol, "ref_id")
-        .write.mode("overwrite").partitionBy("band_idx").parquet(target)
-      IndexMaintenance.writeParamsSidecar(spark, target, FpParamsFile, fpParams(kind))
-    }
-    if (IndexMaintenance.hasManifest(spark, dir))
-      IndexMaintenance.rebuild(spark, dir)(writeTo)
-    else writeTo(dir)
-  }
-
-  private def appendFpIndex(newDocs: DataFrame, dir: String,
-      fp: org.apache.spark.sql.Column, kind: String, idCol: String): Unit = {
-    val spark = newDocs.sparkSession
-    val live = IndexMaintenance.resolveLive(spark, dir)
-    IndexMaintenance.requireParamsMatch(spark, live, FpParamsFile, fpParams(kind),
-      "appendFpIndex")
-    fpIndexRows(newDocs, fp, idCol, "ref_id")
-      .write.mode("append").partitionBy("band_idx").parquet(live)
-  }
-
   private def probeFpIndex(
       incoming: DataFrame, dir: String, fp: org.apache.spark.sql.Column,
       kind: String, maxDist: Int, idCol: String, broadcastIncoming: Boolean): DataFrame = {
-    val spark = incoming.sparkSession
-    val live = IndexMaintenance.resolveLive(spark, dir)
-    IndexMaintenance.requireParamsMatch(spark, live, FpParamsFile, fpParams(kind),
-      "dedupAgainstFpIndex")
-    val idx = IndexMaintenance.filterTombstoned(spark, dir,
-      spark.read.parquet(live), "ref_id")
+    val idx = IndexMaintenance.openIndex(incoming.sparkSession, dir, FpLayout,
+      fpParams(kind), "ref_id", "dedupAgainstFpIndex")
     val inRows0 = fpIndexRows(incoming, fp, idCol, "new_id")
       .withColumnRenamed("fp", "nfp")
     val inRows = if (broadcastIncoming) broadcast(inRows0) else inRows0

@@ -381,11 +381,8 @@ object Similarity {
       idQ: String = "qid",
       idC: String = "cid",
       vecCol: String = "embedding"): DataFrame = {
-    val spark = queries.sparkSession
-    val live = IndexMaintenance.resolveLive(spark, indexDir)
-    requireModelMatch(spark, live, centroidVecs, codebooks, "ivfRangeSearchIndexed")
-    val idx = IndexMaintenance.filterTombstoned(spark, indexDir,
-      spark.read.parquet(live), idC)
+    val idx = IndexMaintenance.openIndex(queries.sparkSession, indexDir, IvfLayout,
+      modelSig(centroidVecs, codebooks), idC, "ivfRangeSearchIndexed")
     val qAssigned = assignCells(
       queries.select(col(idQ), col(vecCol).as("_qv")), centroidVecs, "_qv", nProbe)
     val probedCells = qAssigned.select("centroid_id").distinct()
@@ -787,11 +784,29 @@ object Similarity {
     * The final best-candidate pick stays a rank WINDOW: it gets the
     * map-side WindowGroupLimit pushdown (≤ 1 row per qid per partition
     * crosses its exchange) and is NaN-total where a heap key is not.
-    * MiningSpec pins heap ≡ window on randomized pairs. */
+    * MiningSpec pins heap ≡ window on randomized pairs.
+    *
+    * Storage: the barrier is [[Checkpoints.loopBarrier]], eager — by
+    * default a `localCheckpoint` (the whole pair table in executor block
+    * storage, memory then local disk, unreplicated, lost with its
+    * executor); under `spark.graft.reliableCheckpointDir` a checkpoint
+    * written under that root. The returned frame reads the barrier
+    * lazily, so it is never released here: it lives until the returned
+    * frame is garbage collected, when the ContextCleaner drops the blocks
+    * (reliable files only with
+    * `spark.cleaner.referenceTracking.cleanCheckpoints=true`, or by an
+    * enclosing [[Checkpoints.reapScope]] once the result is written out).
+    *
+    * Null ids: a row with a null qid or cid can never match the topkSum
+    * equi-joins, so it is dropped from the output. It is dropped before
+    * the barrier too, so it feeds neither side's top-k sum and the
+    * non-null results equal those of the same input without it
+    * (MiningSpec). */
   private def marginFromPairs(pairs: DataFrame, k: Int, threshold: Double): DataFrame = {
     requireIntegralId(pairs, "qid", "marginFromPairs")
     requireIntegralId(pairs, "cid", "marginFromPairs")
-    val p = Checkpoints.loopBarrier(pairs.select("qid", "cid", "_sm"))
+    val p = Checkpoints.loopBarrier(pairs.select("qid", "cid", "_sm")
+      .filter(col("qid").isNotNull && col("cid").isNotNull))
     def topkSum(key: String, other: String, out: String): DataFrame =
       p.filter(col("_sm").isNotNull)
         .groupBy(key)
@@ -1220,20 +1235,14 @@ object Similarity {
       dir: String,
       idC: String = "cid",
       vecCol: String = "embedding"): Unit = {
-    val spark = candidates.sparkSession
-    def writeTo(target: String): Unit = {
-      encodeForIndex(candidates, centroidVecs, codebooks, idC, vecCol)
-        .write.mode("overwrite").partitionBy("centroid_id").parquet(target)
-      writeModelSig(spark, target, centroidVecs, codebooks)
-    }
     // manifest-aware (r12): on a manifest layout a (re)build lands as a
     // fresh generation + atomic pointer swap — retrain-and-swap with
     // zero serving gap (new model picked up by the next probe that
     // passes the new model's arguments; a probe still holding the old
     // model fails LOUDLY on the sidecar, never mixes codes)
-    if (IndexMaintenance.hasManifest(spark, dir))
-      IndexMaintenance.rebuild(spark, dir)(writeTo)
-    else writeTo(dir)
+    IndexMaintenance.writeIndex(
+      encodeForIndex(candidates, centroidVecs, codebooks, idC, vecCol),
+      dir, IvfLayout, modelSig(centroidVecs, codebooks))
   }
 
   /** Deterministic fingerprint of the (centroids, codebooks) model a
@@ -1251,35 +1260,11 @@ object Similarity {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  private val SigFile = "_graft_model"
-
-  private def writeModelSig(spark: org.apache.spark.sql.SparkSession, dir: String,
-      centroidVecs: Seq[Array[Double]], codebooks: Array[Array[Array[Double]]]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir, SigFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(modelSig(centroidVecs, codebooks).getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Throws when `dir` carries a model sidecar that does not match the
-    * supplied model. Indexes written before the sidecar existed (or by
-    * external tools) pass unchecked. */
-  private def requireModelMatch(spark: org.apache.spark.sql.SparkSession, dir: String,
-      centroidVecs: Seq[Array[Double]], codebooks: Array[Array[Array[Double]]],
-      api: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir, SigFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val stored = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      val given = modelSig(centroidVecs, codebooks)
-      require(stored == given,
-        s"$api: index at $dir was built under a different model " +
-          s"(stored $stored, supplied $given) — PQ codes are not portable " +
-          "across models; rebuild with writeIvfPqIndex")
-    }
-  }
+  /** The IVF-PQ index's layout: code rows partitioned by cell, guarded
+    * by the [[modelSig]] sidecar. Indexes written before the sidecar
+    * existed (or by external tools) pass the guard unchecked. */
+  private val IvfLayout =
+    IndexMaintenance.IndexLayout("centroid_id", "_graft_model", "model parameters")
 
   /** Incremental maintenance of a [[writeIvfPqIndex]] layout (r11 — the
     * last piece of the production ANN lifecycle): assign + PQ-encode
@@ -1308,10 +1293,9 @@ object Similarity {
       idC: String = "cid",
       vecCol: String = "embedding"): Unit = {
     // manifest-aware (r12): appends land in the LIVE generation
-    val live = IndexMaintenance.resolveLive(newRows.sparkSession, dir)
-    requireModelMatch(newRows.sparkSession, live, centroidVecs, codebooks, "appendIvfPqIndex")
-    encodeForIndex(newRows, centroidVecs, codebooks, idC, vecCol)
-      .write.mode("append").partitionBy("centroid_id").parquet(live)
+    IndexMaintenance.appendIndex(
+      encodeForIndex(newRows, centroidVecs, codebooks, idC, vecCol),
+      dir, IvfLayout, modelSig(centroidVecs, codebooks), "appendIvfPqIndex")
   }
 
   /** One-file-per-cell compaction of a [[writeIvfPqIndex]] layout after
@@ -1371,15 +1355,9 @@ object Similarity {
       idQ: String = "qid",
       idC: String = "cid",
       vecCol: String = "embedding"): DataFrame = {
-    // resolveLive per probe (r12): a manifest-pointer compaction swap is
-    // picked up atomically by the next probe/micro-batch; tombstones
-    // stay at the root (pending deletes are generation-independent)
-    val live = IndexMaintenance.resolveLive(queries.sparkSession, indexDir)
-    requireModelMatch(queries.sparkSession, live, centroidVecs, codebooks,
-      "ivfPqTopKIndexed")
     val m = codebooks.length
-    val codes = IndexMaintenance.filterTombstoned(queries.sparkSession, indexDir,
-      queries.sparkSession.read.parquet(live), idC)
+    val codes = IndexMaintenance.openIndex(queries.sparkSession, indexDir, IvfLayout,
+      modelSig(centroidVecs, codebooks), idC, "ivfPqTopKIndexed")
     val qAssigned = assignCells(
       queries.select(col(idQ), col(vecCol).as("_qv")), centroidVecs, "_qv", nProbe)
     // STATIC partition pruning on the probed cells (r12): the probed

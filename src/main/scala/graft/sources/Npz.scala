@@ -4,8 +4,6 @@ import java.io.{DataInputStream, InputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.ZipFile
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** Minimal NumPy `.npy` / `.npz` reader (format spec: NEP-1, public) — an
   * ingestion source for numpy-interchange data (the reference ships its
   * real SSMIS swath as `test_files/ssmis_swath.npz`, loaded with np.load
@@ -101,24 +99,5 @@ object Npz {
         try name -> readNpy(in) finally in.close()
       }.toMap
     } finally zf.close()
-  }
-
-  /** A 2-D npz array as a DataFrame: one row per array row, one column per
-    * array column plus a 0-based `row_id`. Driver-side load + parallelize —
-    * the ingest step before a parquet write for cluster-scale use. */
-  def toDataFrame(spark: SparkSession, path: String, arrayName: String,
-      colNames: Seq[String]): DataFrame = {
-    val arr = readNpz(path).getOrElse(arrayName,
-      throw new IllegalArgumentException(s"no array '$arrayName' in $path"))
-    require(arr.cols == colNames.size, s"array has ${arr.cols} cols, got ${colNames.size} names")
-    import spark.implicits._
-    val rows = (0 until arr.rows).map { r =>
-      (r.toLong, (0 until arr.cols).map(c => arr(r, c)))
-    }
-    rows.toDF("row_id", "_vals")
-      .select(org.apache.spark.sql.functions.col("row_id") +:
-        colNames.zipWithIndex.map { case (n, i) =>
-          org.apache.spark.sql.functions.col("_vals").getItem(i).as(n)
-        }: _*)
   }
 }

@@ -66,18 +66,6 @@ object StreamingOps {
         sum(col(valCol).cast(org.apache.spark.sql.types.DecimalType(18, 2)))
           .cast("double").as("sum_v"))
 
-  /** Streaming event-type counts (events-table shape): tumbling windows. */
-  def eventCounts(
-      stream: DataFrame,
-      windowDuration: String = "1 hour",
-      watermark: String = "2 hours"): DataFrame =
-    stream
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowDuration), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 6)))
-          .cast("double").as("sum_v"))
-
   /** One swath pixel on the stream. */
   final case class EwaPixel(ts: java.sql.Timestamp, y: Int, x: Int,
       lon: Double, lat: Double, value: Double)

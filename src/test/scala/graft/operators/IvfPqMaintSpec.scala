@@ -109,6 +109,11 @@ class IvfPqMaintSpec extends SparkSpec {
     val ctr = graft.queries.TrainedCentroids.sf001k8
     val dir = java.nio.file.Files.createTempDirectory("ivfpq_sig").toString
     Similarity.writeIvfPqIndex(c, ctr, books, dir)
+    // the on-disk sidecar format (md5 hex of the model's doubles):
+    // indexes written by earlier builds must still open
+    assert(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(dir, "_graft_model")).toSeq ===
+      "ed29f866ff051bee5757730165c7bb31".getBytes("UTF-8").toSeq)
     // a "retrained" model: one codebook entry nudged
     val books2 = books.map(_.map(_.clone)); books2(0)(0)(0) += 0.25
     val q = emb.limit(1).select(col("vec_id").as("qid"), col("embedding"))

@@ -138,6 +138,10 @@ class MinhashIndexSpec extends SparkSpec {
   test("parameter sidecar rejects a different hash family") {
     val dir = java.nio.file.Files.createTempDirectory("mh_params").toString
     Dedup.writeMinhashIndex(docs.limit(50), dir, numHashes = 8, rowsPerBand = 2)
+    // the on-disk sidecar format: indexes written by earlier builds must still open
+    assert(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(dir, "_graft_minhash_params")).toSeq ===
+      "numHashes=8 rowsPerBand=2 shingleN=2".getBytes("UTF-8").toSeq)
     val e = intercept[IllegalArgumentException] {
       Dedup.dedupAgainstMinhashIndex(docs.limit(10), dir, numHashes = 8, rowsPerBand = 4)
     }

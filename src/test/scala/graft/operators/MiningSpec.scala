@@ -94,6 +94,30 @@ class MiningSpec extends SparkSpec {
     assert(anyMined > 0, "vacuous parity: no (k, threshold) combination mined anything")
   }
 
+  test("marginMine: null-id rows are dropped and do not move any non-null result") {
+    val s = spark
+    import s.implicits._
+    // the null-id query sits on top of candidate 10 and the null-id
+    // candidate on top of query 2: were either counted, it would enter a
+    // side's top-k sum and shift that side's margins
+    def vec(seed: Long): Seq[Float] = {
+      val r = new scala.util.Random(seed)
+      Seq.fill(4)(r.nextDouble().toFloat - 0.5f)
+    }
+    val qRows = (1L to 6L).map(i => (Option(i), vec(i)))
+    val cRows = (10L to 19L).map(i => (Option(i), vec(i * 7)))
+    val qs = (qRows :+ ((None, vec(70L)))).toDF("qid", "embedding")
+    val cs = (cRows :+ ((None, vec(2L)))).toDF("cid", "embedding")
+    def mined(q: org.apache.spark.sql.DataFrame, c: org.apache.spark.sql.DataFrame) =
+      Similarity.marginMine(q, c, k = 2, threshold = 0.0).orderBy("qid").collect().toSeq
+    val withNulls = mined(qs, cs)
+    assert(withNulls.forall(r => !r.isNullAt(0) && !r.isNullAt(1)),
+      "no output row may carry a null id")
+    assert(withNulls.nonEmpty, "vacuous comparison: nothing mined")
+    assert(withNulls === mined(qs.filter(col("qid").isNotNull), cs.filter(col("cid").isNotNull)),
+      "null-id rows must not change the non-null results")
+  }
+
   test("marginMineWith: full probe budget reproduces the exact miner bit-for-bit") {
     val s = spark
     import s.implicits._

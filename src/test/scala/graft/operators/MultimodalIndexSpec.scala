@@ -78,6 +78,10 @@ class MultimodalIndexSpec extends SparkSpec {
       "the exact copy must be flagged against its reference")
     assert(got.exists(p => p._1 == 10L && !p._2), "the near-dup must be flagged")
 
+    // the on-disk sidecar format: indexes written by earlier builds must still open
+    assert(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(dir, "_graft_fp_params")).toSeq ===
+      "kind=audiofp63 bands=5 bits=13".getBytes("UTF-8").toSeq)
     // wrong fingerprint family fails loudly
     val ex = intercept[IllegalArgumentException] {
       Multimodal.dedupAgainstImageFpIndex(incoming, dir).collect()
@@ -180,5 +184,41 @@ class MultimodalIndexSpec extends SparkSpec {
       assert(perBatch(1).exists(p => p._1 == 51L && !p._2 && p._3.contains("7")),
         "51 must now be attributed to the appended reference")
     } finally query.stop()
+  }
+
+  test("every guarded index entry point costs O(1) control reads: 1 flat, 2 on a manifest layout") {
+    val s = spark
+    import s.implicits._
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val c = emb.select(col("vec_id").as("cid"), col("embedding"))
+    val books = Similarity.pqCodebooks(c, m = 8, ksub = 16)
+    val ctr = graft.queries.TrainedCentroids.sf001k8
+    val q = emb.limit(1).select(col("vec_id").as("qid"), col("embedding"))
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val refs = (1L to 3L).map(i => (i, wav(samples(i.toInt * 7)))).toDF("doc_id", "payload")
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val (ivf, mh, fp) = (tmp("reads_ivf"), tmp("reads_mh"), tmp("reads_fp"))
+    Similarity.writeIvfPqIndex(c.filter(col("cid") % 4 === 0), ctr, books, ivf)
+    Dedup.writeMinhashIndex(docs.limit(20), mh)
+    Multimodal.writeAudioFpIndex(refs, fp)
+    val guarded: Seq[(String, () => Any)] = Seq(
+      "appendIvfPqIndex" -> (() => Similarity.appendIvfPqIndex(c.limit(1), ctr, books, ivf)),
+      "ivfPqTopKIndexed" -> (() => Similarity.ivfPqTopKIndexed(q, ivf, c, ctr, books, k = 1)),
+      "ivfRangeSearchIndexed" ->
+        (() => Similarity.ivfRangeSearchIndexed(q, ivf, c, ctr, books, minSim = 0.9)),
+      "appendMinhashIndex" -> (() => Dedup.appendMinhashIndex(docs.limit(2), mh)),
+      "dedupAgainstMinhashIndex" -> (() => Dedup.dedupAgainstMinhashIndex(docs.limit(2), mh)),
+      "appendAudioFpIndex" -> (() => Multimodal.appendAudioFpIndex(refs.limit(1), fp)),
+      "dedupAgainstAudioFpIndex" -> (() => Multimodal.dedupAgainstAudioFpIndex(refs, fp)))
+    // flat: the sidecar read; manifest: the manifest resolve + the sidecar read
+    for ((layout, want) <- Seq("flat" -> 1L, "manifest" -> 2L)) {
+      if (layout == "manifest") Seq(ivf, mh, fp).foreach(IndexMaintenance.enableManifest(spark, _))
+      for ((api, call) <- guarded) {
+        val before = IndexMaintenance.controlReads.get()
+        call()
+        val reads = IndexMaintenance.controlReads.get() - before
+        assert(reads === want, s"$api on a $layout layout did $reads control-file reads")
+      }
+    }
   }
 }
