@@ -1449,7 +1449,7 @@ object Dedup {
     * guarded by the hash-family sidecar — signatures are not comparable
     * across parameter sets. */
   private val MinhashLayout = IndexMaintenance.IndexLayout(
-    "band_idx", "_graft_minhash_params", "MinHash parameters")
+    Seq("band_idx"), "_graft_minhash_params", "MinHash parameters")
 
   private def minhashParams(numHashes: Int, rowsPerBand: Int, shingleN: Int): String =
     s"numHashes=$numHashes rowsPerBand=$rowsPerBand shingleN=$shingleN"

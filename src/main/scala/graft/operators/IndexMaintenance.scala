@@ -23,14 +23,15 @@ import org.apache.spark.sql.functions._
   * result; MinhashIndexSpec and IvfPqMaintSpec pin probe-before ==
   * probe-after bit-exactly.
   *
-  * Lifecycle: the three parameter-sidecar indexes — IVF-PQ
-  * (`Similarity`, partitioned by `centroid_id`, sidecar `_graft_model`),
-  * MinHash (`Dedup`, `band_idx`, `_graft_minhash_params`) and media
-  * fingerprints (`Multimodal`, `band_idx`, `_graft_fp_params`) — write,
+  * Lifecycle: the parameter-sidecar indexes — IVF-PQ (`Similarity`,
+  * partitioned by `centroid_id`, sidecar `_graft_model`), MinHash
+  * (`Dedup`, `band_idx`, `_graft_minhash_params`), media fingerprints
+  * (`Multimodal`, `band_idx`, `_graft_fp_params`) and the resampler
+  * caches (`Resampler`, unpartitioned, `_graft_resample_params`) — write,
   * append and open through one code path: [[writeIndex]] (flat overwrite
   * or a new manifest generation via [[rebuild]]), [[appendIndex]] and
   * [[openIndex]] (live generation, guard, read, tombstone filter). All
-  * three planes share one guard, [[requireParamsMatch]], whose sidecar
+  * planes share one guard, [[requireParamsMatch]], whose sidecar
   * read goes through [[readSmall]]: one control read per guarded call on
   * a flat layout, two on a manifest layout.
   *
@@ -299,19 +300,22 @@ object IndexMaintenance {
   // ------------------------------------------------- index lifecycle
 
   /** How one operator plane persists its index: the parquet partition
-    * column, the `_graft_*` parameter sidecar, and what a mismatched
-    * sidecar means, for the guard's message. */
-  private[graft] final case class IndexLayout(partitionCol: String, sidecar: String, what: String)
+    * columns (none for an unpartitioned index), the `_graft_*` parameter
+    * sidecar, and what a mismatched sidecar means, for the guard's message. */
+  private[graft] final case class IndexLayout(
+      partitionCols: Seq[String], sidecar: String, what: String)
 
   /** Write a complete index of `rows` with sidecar content `params`: a
     * flat overwrite of `dir`, or on a manifest layout a new generation
     * through [[rebuild]] — a zero-gap swap that a probe still holding the
-    * old parameters fails on loudly, never mixing the two builds. */
+    * old parameters fails on loudly, never mixing the two builds. The
+    * sidecar is written after the data, so a present sidecar marks a
+    * complete write. */
   private[graft] def writeIndex(
       rows: DataFrame, dir: String, layout: IndexLayout, params: String): Unit = {
     val spark = rows.sparkSession
     def writeTo(target: String): Unit = {
-      rows.write.mode("overwrite").partitionBy(layout.partitionCol).parquet(target)
+      rows.write.mode("overwrite").partitionBy(layout.partitionCols: _*).parquet(target)
       writeParamsSidecar(spark, target, layout.sidecar, params)
     }
     if (hasManifest(spark, dir)) rebuild(spark, dir)(writeTo) else writeTo(dir)
@@ -323,7 +327,7 @@ object IndexMaintenance {
       params: String, api: String): Unit = {
     val live = resolveLive(rows.sparkSession, dir)
     requireParamsMatch(rows.sparkSession, live, layout.sidecar, params, api, layout.what)
-    rows.write.mode("append").partitionBy(layout.partitionCol).parquet(live)
+    rows.write.mode("append").partitionBy(layout.partitionCols: _*).parquet(live)
   }
 
   /** The live rows of the index at `dir` for a probe: resolve the live
@@ -404,9 +408,9 @@ object IndexMaintenance {
     * path now holding the compacted layout: `dir` itself when `swap`
     * (default), else the staging dir.
     *
-    * On a manifest-pointer layout ([[enableManifest]]) this routes to
-    * the generation swap instead: the compacted rows land in a NEW
-    * generation dir, the one-line manifest is atomically repointed, and
+    * On a manifest-pointer layout ([[enableManifest]]) this is a
+    * [[rebuild]] instead: the compacted rows land in a NEW generation
+    * dir, the one-line manifest is atomically repointed, and
     * the live path is never absent — serving probes (including
     * mid-stream `annServe`/`dedupServe` micro-batches) are safe across
     * the swap; `swap` is ignored (the manifest IS the blue/green
@@ -424,7 +428,14 @@ object IndexMaintenance {
     // non-atomic-rename store is the documented swap=false case
     if (swap) requireAtomicRename(spark, fs, "compact")
     if (fs.exists(new Path(live, ManifestFile)))
-      return compactGeneration(spark, dir, partitionCol, tombstoneIdCol)
+      return rebuild(spark, dir) { next =>
+        // single-mutator guard: appends land in the live generation,
+        // tombstones at the root — snapshot both, re-check before publish
+        val liveGen = new Path(resolveLive(spark, dir))
+        val snapshot = mutationScope(fs, live, liveGen)
+        writeCompacted(spark, dir, liveGen, new Path(next), partitionCol, tombstoneIdCol)
+        requireNoDrift(dir, "the manifest swap", snapshot, mutationScope(fs, live, liveGen))
+      }
     val staging = new Path(dir + "__compacting")
     val backup = new Path(dir + "__precompact")
     fs.delete(staging, true)
@@ -435,104 +446,43 @@ object IndexMaintenance {
     // append/tombstone racing this compaction fails the compaction
     // instead of vanishing into __precompact
     val snapshot = listTree(fs, live)
-
-    val rows = spark.read.parquet(dir)
-    val liveRows = tombstoneIdCol match {
-      case Some(idc) => filterTombstoned(spark, dir, rows, idc)
-      case None => rows
-    }
-    liveRows
-      .repartition(col(partitionCol))
-      .write.partitionBy(partitionCol).parquet(staging.toString)
-
-    // carry the model/parameter sidecars byte-verbatim — the compacted
-    // index is the SAME index, so append/probe guards must keep
-    // matching. FILES only: the tombstone DIRECTORY is deliberately not
-    // carried — its deletes were just materialized into the rewrite
-    fs.listStatus(live).map(_.getPath)
-      .filter(p => p.getName.startsWith("_graft_") && fs.getFileStatus(p).isFile)
-      .foreach { p =>
-        val in = fs.open(p)
-        val bytes =
-          try {
-            val buf = new java.io.ByteArrayOutputStream()
-            org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 65536, false)
-            buf.toByteArray
-          } finally in.close()
-        val out = fs.create(new Path(staging, p.getName), true)
-        try out.write(bytes) finally out.close()
-      }
-
+    writeCompacted(spark, dir, live, staging, partitionCol, tombstoneIdCol)
     if (!swap) return staging.toString
-    val drift = listTree(fs, live).toSet.diff(snapshot.toSet)
-    require(drift.isEmpty,
-      s"compact: concurrent mutation of $dir detected (single-mutator " +
-        s"contract) — aborting before the swap; changed: " +
-        drift.take(5).map(_._1).mkString(", "))
+    requireNoDrift(dir, "the swap", snapshot, listTree(fs, live))
     require(fs.rename(live, backup), s"compact: could not stage-out $dir")
     require(fs.rename(staging, live), s"compact: could not swap in ${staging.getName}")
     fs.delete(backup, true)
     dir
   }
 
-  /** [[compact]] on a manifest-pointer layout: write generation N+1,
-    * atomically repoint the manifest, clear materialized tombstones,
-    * delete generations older than the one just superseded (that one is
-    * retained for in-flight readers and removed by the NEXT compaction). */
-  private def compactGeneration(
-      spark: SparkSession,
-      dir: String,
-      partitionCol: String,
-      tombstoneIdCol: Option[String]): String = {
-    val fs = fileSystem(spark, dir)
-    val root = fs.makeQualified(new Path(dir))
-    val liveGenName = readSmall(fs, new Path(root, ManifestFile))
-    val liveGen = new Path(root, liveGenName)
-    val nextN = fs.listStatus(root).map(_.getPath.getName)
-      .filter(_.startsWith(GenPrefix))
-      .map(_.stripPrefix(GenPrefix).toInt).max + 1
-    val next = new Path(root, f"$GenPrefix$nextN%05d")
-    fs.delete(next, true)
-
-    // single-mutator guard: appends land in the live generation,
-    // tombstones at the root — snapshot both, re-check before publish
-    val snapshot = mutationScope(fs, root, liveGen)
-
-    val rows = spark.read.parquet(liveGen.toString)
-    val liveRows = tombstoneIdCol match {
-      case Some(idc) => filterTombstoned(spark, dir, rows, idc)
-      case None => rows
-    }
-    liveRows
+  /** [[compact]]'s rewrite of the index at `from` into `to`: the rows
+    * minus materialized tombstones, one file per `partitionCol` value,
+    * plus the model/parameter sidecars carried byte-verbatim — the
+    * compacted index is the SAME index, so append/probe guards must keep
+    * matching. FILES only: the tombstone DIRECTORY is deliberately not
+    * carried — its deletes were just materialized into the rewrite. */
+  private def writeCompacted(spark: SparkSession, dir: String, from: Path, to: Path,
+      partitionCol: String, tombstoneIdCol: Option[String]): Unit = {
+    val rows = spark.read.parquet(from.toString)
+    tombstoneIdCol.fold(rows)(filterTombstoned(spark, dir, rows, _))
       .repartition(col(partitionCol))
-      .write.partitionBy(partitionCol).parquet(next.toString)
-    fs.listStatus(liveGen).map(_.getPath)
+      .write.partitionBy(partitionCol).parquet(to.toString)
+    val fs = fileSystem(spark, dir)
+    fs.listStatus(from).map(_.getPath)
       .filter(p => p.getName.startsWith("_graft_") && fs.getFileStatus(p).isFile)
-      .foreach { p =>
-        val bytes = {
-          val in = fs.open(p)
-          try {
-            val buf = new java.io.ByteArrayOutputStream()
-            org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 65536, false)
-            buf.toByteArray
-          } finally in.close()
-        }
-        val out = fs.create(new Path(next, p.getName), true)
-        try out.write(bytes) finally out.close()
-      }
+      .foreach(p => org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, new Path(to, p.getName),
+        false, true, spark.sparkContext.hadoopConfiguration))
+  }
 
-    val drift = mutationScope(fs, root, liveGen).toSet.diff(snapshot.toSet)
+  /** The single-mutator abort: the tree [[compact]] read changed before
+    * it could publish the rewrite. */
+  private def requireNoDrift(dir: String, swap: String,
+      before: Seq[(String, Long, Long)], after: Seq[(String, Long, Long)]): Unit = {
+    val drift = after.toSet.diff(before.toSet)
     require(drift.isEmpty,
       s"compact: concurrent mutation of $dir detected (single-mutator " +
-        s"contract) — aborting before the manifest swap; changed: " +
+        s"contract) — aborting before $swap; changed: " +
         drift.take(5).map(_._1).mkString(", "))
-    writeManifest(spark, root, next.getName)
-    fs.delete(new Path(root, TombstoneDir), true) // materialized above
-    fs.listStatus(root).map(_.getPath)
-      .filter(p => p.getName.startsWith(GenPrefix) &&
-        p.getName != next.getName && p.getName != liveGen.getName)
-      .foreach(p => fs.delete(p, true))
-    next.toString
   }
 
   /** Everything a concurrent mutator could touch while a generation

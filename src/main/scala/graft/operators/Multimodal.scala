@@ -351,7 +351,7 @@ object Multimodal {
 
   /** The fingerprint index's layout: banded rows partitioned by band,
     * guarded by the fingerprint-family sidecar. */
-  private val FpLayout = IndexMaintenance.IndexLayout("band_idx", "_graft_fp_params", "parameters")
+  private val FpLayout = IndexMaintenance.IndexLayout(Seq("band_idx"), "_graft_fp_params", "parameters")
   private def fpParams(kind: String): String = s"kind=$kind bands=5 bits=13"
 
   /** Materialize a perceptual-fingerprint index ONCE as a parquet layout

@@ -8,15 +8,76 @@ import org.apache.spark.sql.functions._
 /** The uniform precompute -> compute lifecycle of the reference
   * (`pyresample/resampler.py:50-141`, `future/resamplers/resampler.py:204`):
   * `precompute()` builds a reusable index DataFrame (the kd-tree / LUT
-  * analog), `compute(data)` applies it to one dataset. The index can be
-  * persisted to parquet keyed by the geometry pair's semantic hash
-  * (`bilinear/xarr.py:198-219` zarr cache) and reused across datasets.
+  * analog), `compute(data)` applies it to one dataset.
+  *
+  * Given a `cacheDir`, the index persists to parquet and is reused across
+  * datasets and instances (`bilinear/xarr.py:198-219` zarr cache). An
+  * entry lives at `<cacheDir>/<kind>_<sha1(key)>`; the key text names the
+  * resampler kind, k, the radius, an order-independent content fingerprint
+  * of the source `(src_id, lon, lat)` rows, the target's identity (the
+  * area's `semanticHash`, or a fingerprint of the target frame) and the
+  * caller's `cacheKey` salt — the reference likewise hashes both
+  * geometries and the kwargs into its cache name (`resampler.py:69-78`).
+  * Entries write and open through [[IndexMaintenance.writeIndex]] and
+  * [[IndexMaintenance.openIndex]] with the key text as the
+  * `_graft_resample_params` sidecar, which is written after the data and
+  * so commits the entry: a torn write has no sidecar and is rebuilt,
+  * never read.
   */
 trait Resampler {
   /** Build (or load) the geometry-dependent index table. Idempotent. */
   def precompute(): DataFrame
   /** Apply the index to a source dataset carrying (src_id, valueCol). */
   def compute(data: DataFrame, valueCol: String = "value"): DataFrame
+}
+
+/** The one persisted path of the resampler caches (see [[Resampler]]). */
+private object ResamplerCache {
+  private val Layout =
+    IndexMaintenance.IndexLayout(Nil, "_graft_resample_params", "resampler geometry")
+
+  /** Order-independent content hashes of `(id, lon, lat)` frames, one per
+    * frame, in ONE Spark job with no shuffle: the frames union under a
+    * frame tag, every row hashes with xxhash64, and each partition's
+    * per-frame sums reach the driver. The sums are wrapping `Long`
+    * additions; a SQL `sum` of the hashes overflows under ANSI mode. The
+    * partitions fold internal rows, with no Dataset encoder: the job runs
+    * once per cached resampler instance, and the typed form took ~50 ms
+    * more per job on a 4-core local session. */
+  def fingerprints(frames: DataFrame*): Seq[Long] = {
+    val n = frames.size
+    frames.zipWithIndex
+      .map { case (f, i) => f.select(lit(i), xxhash64(f.columns.map(col): _*)) }
+      .reduce(_ union _)
+      .queryExecution.toRdd
+      .mapPartitions { rows =>
+        val acc = new Array[Long](n)
+        rows.foreach(r => acc(r.getInt(0)) += r.getLong(1))
+        Iterator(acc)
+      }
+      .collect()
+      .foldLeft(Seq.fill(n)(0L))((a, b) => a.zip(b).map { case (x, y) => x + y })
+  }
+
+  /** The index of one resampler: `build` persisted in memory without a
+    * `cacheDir`; else the entry keyed by the geometry pair, opened on a
+    * hit (sidecar present) and built and committed first on a miss.
+    * `geometry` (source fingerprint, target identity) runs only when
+    * caching. */
+  def index(spark: SparkSession, cacheDir: Option[String], kind: String, k: Int,
+      radius: Double, salt: String)(geometry: => (Long, String))(
+      build: => DataFrame): DataFrame = cacheDir match {
+    case None => build.persist()
+    case Some(d) =>
+      val (source, target) = geometry
+      val key = f"kind=$kind k=$k radius=$radius source=$source%016x target=$target salt=$salt"
+      val sha1 = java.security.MessageDigest.getInstance("SHA-1")
+        .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      val dir = s"$d/${kind}_$sha1"
+      if (IndexMaintenance.readParamsSidecar(spark, dir, Layout.sidecar).isEmpty)
+        IndexMaintenance.writeIndex(build, dir, Layout, key)
+      IndexMaintenance.openIndex(spark, dir, Layout, key, "dst_id", s"$kind resampler cache")
+  }
 }
 
 /** Nearest-neighbour resampler: index = (dst_id, src_id) pairs. */
@@ -27,39 +88,22 @@ final class NearestResampler(
     cacheDir: Option[String] = None,
     cacheKey: String = "") extends Resampler {
 
-  private var index: Option[DataFrame] = None
-
-  def precompute(): DataFrame = index.getOrElse {
-    val spark = source.sparkSession
-    val path = cacheDir.map(d => s"$d/nearest_$cacheKey")
-    val idx = path.flatMap(readIfExists(spark, _)).getOrElse {
-      val computed = KnnResample.neighbours(
-        source.select("src_id", "lon", "lat"), target, radius, k = 1)
-        .select("dst_id", "src_id")
-      path.foreach(computed.write.mode("overwrite").parquet(_))
-      path.flatMap(readIfExists(spark, _)).getOrElse(computed.persist())
+  private lazy val index: DataFrame = {
+    val src = source.select("src_id", "lon", "lat")
+    ResamplerCache.index(source.sparkSession, cacheDir, "nearest", 1, radius, cacheKey) {
+      val Seq(s, t) = ResamplerCache.fingerprints(src, target.select("dst_id", "lon", "lat"))
+      (s, f"$t%016x")
+    } {
+      KnnResample.neighbours(src, target, radius, k = 1).select("dst_id", "src_id")
     }
-    index = Some(idx)
-    idx
   }
+
+  def precompute(): DataFrame = index
 
   def compute(data: DataFrame, valueCol: String = "value"): DataFrame =
     precompute()
       .join(data.select(col("src_id"), col(valueCol)), "src_id")
       .select("dst_id", valueCol)
-
-  private def readIfExists(spark: SparkSession, p: String): Option[DataFrame] =
-    if (Resampler.pathExists(spark, p)) Some(spark.read.parquet(p)) else None
-}
-
-object Resampler {
-  /** Existence probe through the Hadoop FileSystem API — works for any
-    * supported scheme (file:/, hdfs:/, s3a:/ ...), unlike java.io.File
-    * which silently misses on distributed stores. */
-  private[operators] def pathExists(spark: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
-  }
 }
 
 /** Bilinear resampler: index = the (dst_id, s1..s4, t, s) LUT. */
@@ -69,24 +113,21 @@ final class BilinearResampler(
     radius: Double,
     cacheDir: Option[String] = None) extends Resampler {
 
-  private var index: Option[DataFrame] = None
-
-  def precompute(): DataFrame = index.getOrElse {
+  private lazy val index: DataFrame = {
     val spark = source.sparkSession
-    val path = cacheDir.map(d => s"$d/bilinear_${area.semanticHash}")
-    val idx = path.filter(p => Resampler.pathExists(spark, p)).map(spark.read.parquet(_)).getOrElse {
+    val src = source.select("src_id", "lon", "lat")
+    val k = 32 // `bilinear/_base.py:50`
+    ResamplerCache.index(spark, cacheDir, "bilinear", k, radius, salt = "") {
+      (ResamplerCache.fingerprints(src).head, area.semanticHash)
+    } {
       val target = area.grid(spark, withLonLat = true)
         .select(col("cell").as("dst_id"), col("lon"), col("lat"),
           col("proj_x").as("out_x"), col("proj_y").as("out_y"))
-      val l = BilinearResample.lut(source.select("src_id", "lon", "lat"), target, area, radius)
-      path match {
-        case Some(p) => l.write.mode("overwrite").parquet(p); spark.read.parquet(p)
-        case None => l.persist()
-      }
+      BilinearResample.lut(src, target, area, radius, k)
     }
-    index = Some(idx)
-    idx
   }
+
+  def precompute(): DataFrame = index
 
   def compute(data: DataFrame, valueCol: String = "value"): DataFrame =
     BilinearResample.compute(precompute(), data, valueCol)
@@ -109,8 +150,9 @@ object ResamplerRegistry {
 
   /** Gauss-weighted resampler (k=8 default, `kd_tree.py:114`). */
   register("gauss", (src, tgt, r) => new Resampler {
-    def precompute(): DataFrame =
+    private lazy val index =
       KnnResample.neighbours(src.select("src_id", "lon", "lat"), tgt, r, k = 8).persist()
+    def precompute(): DataFrame = index
     def compute(data: DataFrame, valueCol: String): DataFrame = {
       val sigma = r / 2
       precompute()

@@ -1264,7 +1264,7 @@ object Similarity {
     * by the [[modelSig]] sidecar. Indexes written before the sidecar
     * existed (or by external tools) pass the guard unchecked. */
   private val IvfLayout =
-    IndexMaintenance.IndexLayout("centroid_id", "_graft_model", "model parameters")
+    IndexMaintenance.IndexLayout(Seq("centroid_id"), "_graft_model", "model parameters")
 
   /** Incremental maintenance of a [[writeIvfPqIndex]] layout (r11 — the
     * last piece of the production ANN lifecycle): assign + PQ-encode

@@ -61,11 +61,104 @@ class FacadeSpec extends SparkSpec {
     assert(out2.nonEmpty && out2.forall(row => approx(row.getAs[Double]("value"), 5.0, 1e-9)))
   }
 
+  // ---- resampler caches: one entry per geometry pair (resampler.py:69-78)
+
+  /** The second granule of the cache tests: `source`'s ids 2 and 3 swap
+    * positions, so the target's nearest point becomes id 3. */
+  private lazy val movedSource = {
+    val s = spark
+    import s.implicits._
+    Seq(
+      (1L, 11.280789, 56.011037, 1.0),
+      (2L, 12.080402, 55.641535, 2.0),
+      (3L, 12.649354, 55.629675, 3.0)).toDF("src_id", "lon", "lat", "value")
+  }
+  private val blArea = AreaDef("b", Crs.fromProj4("+proj=longlat"), 8, 8, 0, 0, 8, 8)
+  /** A sheared 12x12 swath over `blArea`, moved east by `shift` degrees. */
+  private def blSwath(shift: Double) = {
+    val s = spark
+    import s.implicits._
+    (for { i <- 0 until 12; j <- 0 until 12 } yield {
+      val (lo, la) = (i * 0.8 - 1 + 0.05 * j + shift, j * 0.8 - 1 + 0.03 * i)
+      (i.toLong * 100 + j, lo, la, 2.0 * lo + la)
+    }).toDF("src_id", "lon", "lat", "value")
+  }
+  private val blRadius = 2.5 * 111320
+  private def nearest(src: org.apache.spark.sql.DataFrame, radius: Double, dir: Option[String]) =
+    new NearestResampler(src, target, radius, dir, "t1")
+  private def bilinear(src: org.apache.spark.sql.DataFrame, radius: Double, dir: Option[String]) =
+    new BilinearResampler(src, blArea, radius, dir)
+  private def image(r: Resampler, data: org.apache.spark.sql.DataFrame): Map[Long, Double] =
+    r.compute(data).collect()
+      .map(row => row.getAs[Long]("dst_id") -> row.getAs[Double]("value")).toMap
+  private def entries(dir: String): Seq[java.io.File] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten.filter(_.isDirectory)
+
+  test("resampler caches: a second granule or a new radius on one cacheDir never reads the first's index") {
+    val dirN = Files.createTempDirectory("lutkey").toString
+    assert(image(nearest(source, 100000.0, Some(dirN)), source) == Map(1L -> 2.0))
+    // same area, new granule, same cacheKey: the key covers the source
+    val moved = image(nearest(movedSource, 100000.0, Some(dirN)), source)
+    assert(moved == image(nearest(movedSource, 100000.0, None), source) && moved == Map(1L -> 3.0))
+    // same pair, smaller radius: no source point is in reach any more
+    assert(image(nearest(source, 5000.0, Some(dirN)), source).isEmpty)
+
+    val dirB = Files.createTempDirectory("blutkey").toString
+    val (sw1, sw2) = (blSwath(0.0), blSwath(0.3))
+    val wide = image(bilinear(sw1, blRadius, Some(dirB)), sw1)
+    assert(image(bilinear(sw2, blRadius, Some(dirB)), sw2) == image(bilinear(sw2, blRadius, None), sw2))
+    val narrow = image(bilinear(sw1, blRadius / 4, None), sw1)
+    assert(narrow.nonEmpty && narrow != wide)
+    assert(image(bilinear(sw1, blRadius / 4, Some(dirB)), sw1) == narrow)
+    assert(entries(dirN).size == 3 && entries(dirB).size == 3, "one entry per geometry pair")
+  }
+
+  test("resampler caches: an entry without its sidecar is rebuilt, never read") {
+    // a write cut before its sidecar: another pair's parquet, no _graft_* file
+    def torn(dir: String, other: String): Unit = {
+      val Seq(entry) = entries(dir)
+      val Seq(donor) = entries(other)
+      entry.listFiles().foreach(_.delete())
+      donor.listFiles().filterNot(_.getName.contains("_graft_"))
+        .foreach(f => Files.copy(f.toPath, entry.toPath.resolve(f.getName)))
+    }
+    val (dirN, otherN) = (Files.createTempDirectory("luttorn"), Files.createTempDirectory("luttorn"))
+    nearest(source, 100000.0, Some(dirN.toString)).precompute()
+    nearest(movedSource, 100000.0, Some(otherN.toString)).precompute()
+    torn(dirN.toString, otherN.toString)
+    assert(image(nearest(source, 100000.0, Some(dirN.toString)), source) == Map(1L -> 2.0))
+
+    val (dirB, otherB) = (Files.createTempDirectory("bluttorn"), Files.createTempDirectory("bluttorn"))
+    val (sw1, sw2) = (blSwath(0.0), blSwath(0.3))
+    bilinear(sw1, blRadius, Some(dirB.toString)).precompute()
+    bilinear(sw2, blRadius, Some(otherB.toString)).precompute()
+    torn(dirB.toString, otherB.toString)
+    assert(image(bilinear(sw1, blRadius, Some(dirB.toString)), sw1) ==
+      image(bilinear(sw1, blRadius, None), sw1))
+  }
+
+  test("resampler caches: a second instance on the same pair hits the one entry") {
+    val dir = Files.createTempDirectory("luthit").toString
+    nearest(source, 100000.0, Some(dir)).precompute()
+    def listing = entries(dir).flatMap(_.listFiles()).map(f => (f.getName, f.lastModified)).toSet
+    val written = listing
+    val before = IndexMaintenance.controlReads.get()
+    val r2 = nearest(source, 100000.0, Some(dir))
+    r2.precompute()
+    val reads = IndexMaintenance.controlReads.get() - before
+    assert(entries(dir).size == 1 && listing == written, "the hit must not rewrite the entry")
+    assert(reads >= 1 && reads <= 2, s"a cache hit did $reads control reads")
+    assert(image(r2, source) == Map(1L -> 2.0))
+  }
+
   test("registry lookup and error (future/resamplers/registry.py)") {
     val f = ResamplerRegistry.get("nearest")
     val r = f(source, target, 100000.0)
     assert(r.compute(source).count() == 1)
     assertThrows[IllegalArgumentException](ResamplerRegistry.get("bogus"))
+    // precompute is idempotent: one persisted neighbour table per instance
+    val g = ResamplerRegistry.get("gauss")(source, target, 100000.0)
+    assert(g.precompute() eq g.precompute())
   }
 
   test("freeze: lonlat footprint with resolution (geometry.py:1224)") {
